@@ -64,6 +64,22 @@ from csce438_distributed_password_cracker_spark.plans import pipeline_queries  #
 from csce438_distributed_password_cracker_spark.session import get_spark  # noqa: E402
 
 
+BENCH_LAST = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "BENCH_last.json"
+)
+
+
+def write_last(line: str, path: str = BENCH_LAST) -> None:
+    """Persist the one-line payload.  By now the timed run has finished
+    and its line is on stdout, so a failed write (read-only checkout,
+    full disk) is a warning on stderr, never a failed bench."""
+    try:
+        with open(path, "w") as f:
+            f.write(line + "\n")
+    except OSError as e:
+        print(f"bench.py: warning: could not write {path}: {e}", file=sys.stderr)
+
+
 def _warm_daemons_udf():
     """Identity Arrow kernel: forces the pyspark worker daemons up (fork
     + pandas import) before the timed passes, so that one-off cost never
@@ -338,13 +354,7 @@ def main() -> None:
     # BENCH_last.json next to this file so the comparison can always be
     # reconstructed from the repo.  Unconditional and tiny; the detail
     # file below stays the opt-out-able heavyweight.
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_last.json"
-        ),
-        "w",
-    ) as f:
-        f.write(line + "\n")
+    write_last(line)
     # The driver truncates the stdout line into BENCH_r{N}.json's `tail`,
     # losing the per-query min dict — also write the full payload to a
     # repo file so round-over-round diffs stay machine-readable without

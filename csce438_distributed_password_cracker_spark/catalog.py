@@ -8,6 +8,8 @@ single file (``spark.read.parquet`` handles both transparently).
 
 from __future__ import annotations
 
+import glob
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,6 +28,8 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+_log = logging.getLogger(__name__)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -65,31 +69,35 @@ def _parquet_row_groups(path: str, enough: int) -> int | None:
     full listing scan).  Returns None when the layout cannot be
     inspected locally (non-local scheme, no files) — callers fall back
     to planned-split counting."""
-    import glob as _glob
-    import os as _os
-
     try:
         import pyarrow.parquet as _pq
-
-        if _os.path.isdir(path):
-            files = sorted(
-                _glob.glob(_os.path.join(path, "**", "*.parquet"),
-                           recursive=True)
-            )
-        elif _os.path.isfile(path):
-            files = [path]
-        else:
-            return None
-        if not files:
-            return None
-        n = 0
+        from pyarrow.lib import ArrowInvalid
+    except ImportError as e:
+        _log.warning("cannot count parquet row groups (%s); falling back to "
+                     "planned-split counting", e)
+        return None
+    if os.path.isdir(path):
+        files = sorted(
+            glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+        )
+    elif os.path.isfile(path):
+        files = [path]
+    else:
+        return None
+    if not files:
+        return None
+    n = 0
+    try:
         for f in files:
             n += _pq.ParquetFile(f).metadata.num_row_groups
             if n >= enough:
                 return n
-        return n
-    except Exception:
+    except (OSError, ArrowInvalid) as e:
+        # unreadable file or corrupt footer: an I/O condition, not a bug
+        _log.warning("cannot read parquet footer under %s (%s); falling "
+                     "back to planned-split counting", path, e)
         return None
+    return n
 
 
 def fan_out_scan(

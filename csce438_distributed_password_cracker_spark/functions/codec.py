@@ -9,6 +9,24 @@ The reference stores ordinals in uint32 and silently overflows at width ≥ 7
 (26**7 ≈ 8.03e9 > 2**32, SURVEY.md §1.2); we use int64, exact to width 13
 (26**13 < 2**63).  That divergence is deliberate and tested.
 
+Decode is spelled as a *packed word*.  For width ≤ 8 the W characters
+are the bytes of one bigint, ``0x61…61 + Σ_p shiftleft((id div 26^p) %
+26, 8p)`` — the byte p places above the lowest holds ``'a' + digit_p``
+— and ``CAST(unhex(hex(word)) AS STRING)`` turns it into the string.
+Widths 9-13 ``concat`` two such words: the high W-8 characters, then the
+low 8.  ``hex`` writes the bigint most significant byte first, so the
+least significant digit lands last; ``unhex`` turns those hex pairs back
+into raw bytes.  Both are tight loops inside codegen, and as the top byte
+is ≥ 0x61, ``hex`` never drops a leading zero and the word never goes
+negative.  The obvious spelling, a ``concat`` of W ``char()`` calls,
+builds W one-character strings per candidate and measured ~2× the
+decode cost of this one, more than half of decode + SHA-1; a
+``conv``/``translate`` spelling is slower still.  There is deliberately no second "hash the bytes, decode only
+the survivors" path: the binary → string cast wraps the byte array
+without copying, and that path measured equal to the plain spelling
+within noise.  The DuckDB oracle spelling (``decode_duckdb``) is
+unchanged — the strings are identical, only the Spark spelling moved.
+
 Each helper has two forms:
 - ``*_sql(expr, width)`` → a SQL expression *string* (usable verbatim in
   Spark SQL; the matching DuckDB oracle spelling is produced by
@@ -33,18 +51,32 @@ def keyspace_size(width: int) -> int:
     return ALPHA**width
 
 
+def _packed_word(expr: str, lo: int, hi: int) -> str:
+    """BINARY of the characters for base-26 digits ``hi-1 .. lo`` (at most
+    8, one bigint): byte ``p - lo`` of the word is ``97 + digit_p``."""
+    base = int("61" * (hi - lo), 16)
+    terms = [
+        f"shiftleft((({expr}) div {ALPHA**p}) % {ALPHA}, {8 * (p - lo)})"
+        for p in range(lo, hi)
+    ]
+    return f"unhex(hex({base}L + " + " + ".join(terms) + "))"
+
+
 def decode_sql(expr: str, width: int) -> str:
     """Spark SQL: int64 ordinal expression → fixed-width lowercase string.
 
     Mirrors pass_num2char (server.c:211-224) without the mod-26**len wrap:
-    callers must pass ordinals in [0, 26**width).
+    callers must pass ordinals in [0, 26**width).  Packed-word spelling
+    (see the module docstring): one 64-bit word through width 8, the high
+    ``width - 8`` characters then the low 8 beyond it.
     """
     keyspace_size(width)  # validate
-    parts = [
-        f"char(97 + (({expr}) div {ALPHA**p}) % {ALPHA})"
-        for p in range(width - 1, -1, -1)
-    ]
-    return "concat(" + ", ".join(parts) + ")"
+    if width <= 8:
+        return f"CAST({_packed_word(expr, 0, width)} AS STRING)"
+    return (
+        f"CAST(concat({_packed_word(expr, 8, width)}, "
+        f"{_packed_word(expr, 0, 8)}) AS STRING)"
+    )
 
 
 def decode_duckdb(expr: str, width: int) -> str:

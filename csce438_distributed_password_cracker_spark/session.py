@@ -1,7 +1,8 @@
 """SparkSession factory.
 
-Local-mode testing rides ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads,
-single JVM).  The configs are chosen to be correct at cluster scale too:
+Local-mode testing rides ``local[$SPARK_GRAFT_CPUS]`` (default: the cores
+this process may run on, single JVM).  The configs are chosen to be
+correct at cluster scale too:
 
 - AQE on (runtime coalescing, skew-join splitting) — at 100 TB the static
   shuffle-partition count is always wrong for *some* stage; AQE re-plans.
@@ -21,7 +22,11 @@ DEFAULT_APP = "pwdcrack-spark-engine"
 
 
 def cpu_count() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS`` if set, else the cores visible to this process
+    (its affinity mask, so a container's cpuset is respected) — never more
+    local threads than the host can run."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
 
 
 def get_spark(

@@ -196,6 +196,20 @@ def test_bench_cli_writes_bench_last_equal_to_stdout(tmp_path):
     assert payload["queries"].keys() == {"q_events_scan"}
 
 
+def test_bench_last_write_failure_only_warns(tmp_path, capsys):
+    """The BENCH_last.json write runs after a successful timed run has
+    printed its line: a target that cannot be written (here a directory)
+    must cost a warning on stderr, not the bench's exit status."""
+    import bench
+
+    bench.write_last('{"metric": 1}', str(tmp_path))
+    assert "could not write" in capsys.readouterr().err
+    # the writable path still round-trips the line
+    target = tmp_path / "BENCH_last.json"
+    bench.write_last('{"metric": 1}', str(target))
+    assert target.read_text() == '{"metric": 1}\n'
+
+
 def test_aggregate_catches_distributed_drift():
     """Twenty 0.8 s same-direction risers each pass the per-entry dual
     threshold (0.8 < 1.0 abs) but sum to a 16 s total regression — the

@@ -7,6 +7,7 @@ server.c:199-224) during the survey.
 
 from __future__ import annotations
 
+import hashlib
 import random
 
 from pyspark.sql import functions as F
@@ -76,3 +77,36 @@ def test_increment_matches_reference_semantics(spark):
     ).selectExpr("s", f"{codec.increment_sql('s', width)} AS nxt")
     got = {r["s"]: r["nxt"] for r in df.collect()}
     assert got == {"aaa": "aab", "aaz": "aba", "azz": "baa", "zzz": "aaa", "abc": "abd"}
+
+
+def _edge_ordinals(width: int) -> list[int]:
+    """0, 1, n-1; 26^k - 1 and 26^k for every k < width (the last ordinal
+    before a digit carries, and the first after); 2^32 ± 1 when in range
+    (the reference's uint32 ceiling)."""
+    n = codec.keyspace_size(width)
+    edges = {0, 1, n - 1}
+    for k in range(1, width):
+        edges |= {codec.ALPHA**k - 1, codec.ALPHA**k}
+    edges |= {v for v in (2**32 - 1, 2**32 + 1) if v < n}
+    return sorted(edges)
+
+
+def test_spark_decode_edge_ordinals_all_widths(spark):
+    """Every width 1-13 in ONE Spark job: decode_sql at the carry edges
+    (where a packed byte wraps 'z' -> 'a' and the next one increments),
+    across the two-word split from width 9 on, and past 2^32 — against
+    py_decode, and its sha1 against hashlib (the crack filter's view)."""
+    rows = [(w, v) for w in range(1, codec.MAX_WIDTH + 1) for v in _edge_ordinals(w)]
+    cases = " ".join(
+        f"WHEN {w} THEN {codec.decode_sql('id', w)}"
+        for w in range(1, codec.MAX_WIDTH + 1)
+    )
+    df = spark.createDataFrame(rows, "w INT, id LONG").selectExpr(
+        "w", "id", f"CASE w {cases} END AS s"
+    ).selectExpr("w", "id", "s", "sha1(s) AS h")
+    got = df.collect()
+    assert len(got) == len(rows)
+    for r in got:
+        want = codec.py_decode(r["id"], r["w"])
+        assert r["s"] == want, (r["w"], r["id"], r["s"], want)
+        assert r["h"] == hashlib.sha1(want.encode()).hexdigest()

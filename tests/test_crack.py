@@ -225,6 +225,9 @@ def test_width8_envelope_chunked_loop_early_stop(spark):
     from csce438_distributed_password_cracker_spark.operators.crack import (
         crack_chunked,
     )
+    from csce438_distributed_password_cracker_spark.sources.keyspace import (
+        num_partitions_for,
+    )
 
     n = codec.keyspace_size(8)
     assert n == 26**8 > 2 * 10**11  # the envelope being exercised
@@ -241,7 +244,7 @@ def test_width8_envelope_chunked_loop_early_stop(spark):
     digest = hashlib.sha1(preimage.encode()).hexdigest()
 
     sc = spark.sparkContext
-    per_chunk_parts = min(sc.defaultParallelism, chunk)
+    per_chunk_parts = num_partitions_for(chunk, spark)
     sc.setJobGroup("w8_chunked", "width-8 chunked-loop launch assertion")
     try:
         res = crack_chunked(
@@ -321,7 +324,7 @@ def test_width9_beyond_cap_chunked_recipe(spark):
     digest = hashlib.sha1(preimage.encode()).hexdigest()
 
     sc = spark.sparkContext
-    per_chunk_parts = min(sc.defaultParallelism, chunk)
+    per_chunk_parts = num_partitions_for(chunk, spark)
     sc.setJobGroup("w9_chunked", "width-9 chunked-loop launch assertion")
     try:
         res = crack_chunked(

@@ -491,6 +491,38 @@ def test_fan_out_scan_row_group_guard(spark, sf_oracle, tmp_path):
     assert fan_out_scan(docs, "doc_id", min_parts=0) is docs
 
 
+def test_parquet_row_groups_fallback_is_narrow(tmp_path, caplog, monkeypatch):
+    """The footer count falls back to None (planned-split counting) only
+    for I/O and parquet-metadata errors, and says so in a warning; a
+    programming error in the reader propagates instead of silently
+    disabling the row-group guard."""
+    import logging
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from csce438_distributed_password_cracker_spark.catalog import (
+        _parquet_row_groups,
+    )
+
+    good = tmp_path / "good.parquet"
+    pq.write_table(pa.table({"x": list(range(100))}), good)
+    assert _parquet_row_groups(str(good), 4) == 1
+
+    truncated = tmp_path / "truncated.parquet"
+    truncated.write_bytes(good.read_bytes()[: good.stat().st_size // 2])
+    with caplog.at_level(logging.WARNING):
+        assert _parquet_row_groups(str(truncated), 4) is None
+    assert "cannot read parquet footer" in caplog.text
+
+    def broken_reader(*_a, **_k):
+        raise TypeError("reader bug")
+
+    monkeypatch.setattr(pq, "ParquetFile", broken_reader)
+    with pytest.raises(TypeError, match="reader bug"):
+        _parquet_row_groups(str(good), 4)
+
+
 def test_text_profile_battery_rides_fan_out(spark, sf_oracle):
     """q_text_profile's profile battery input is fanned out (round-11
     optimization): exactly one extra hash exchange on doc_id, and the
