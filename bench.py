@@ -80,6 +80,12 @@ def write_last(line: str, path: str = BENCH_LAST) -> None:
         print(f"bench.py: warning: could not write {path}: {e}", file=sys.stderr)
 
 
+def write_detail(payload: dict, path: str) -> None:
+    """Persist the detail payload; a failed write warns, as in
+    :func:`write_last`."""
+    write_last(json.dumps(payload, indent=1, sort_keys=True), path)
+
+
 def _warm_daemons_udf():
     """Identity Arrow kernel: forces the pyspark worker daemons up (fork
     + pandas import) before the timed passes, so that one-off cost never
@@ -387,9 +393,7 @@ def main() -> None:
             # queries_cpu_median, for attributing any CPU delta to a pass
             "metric_samples": metric_samples,
         }
-        with open(detail, "w") as f:
-            json.dump(detail_payload, f, indent=1, sort_keys=True)
-            f.write("\n")
+        write_detail(detail_payload, detail)
 
 
 if __name__ == "__main__":

@@ -165,9 +165,3 @@ def fan_out_scan(
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target, F.col(key))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view (for the SQL API path)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

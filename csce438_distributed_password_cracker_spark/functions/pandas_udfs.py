@@ -19,14 +19,6 @@ def make_decode_udf(width: int):
     return decode_udf
 
 
-def make_encode_udf():
-    @pandas_udf("long")
-    def encode_udf(strs: pd.Series) -> pd.Series:
-        return strs.map(codec.py_encode)
-
-    return encode_udf
-
-
 def make_weighted_median_udaf():
     """Grouped-aggregate pandas UDAF (§2.11 UDAF surface): the exact
     LOWER weighted median — smallest value whose cumulative weight

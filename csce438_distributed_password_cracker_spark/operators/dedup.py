@@ -47,20 +47,6 @@ def tokens_col(text_col: str) -> Column:
     return F.split(F.col(text_col), " ")
 
 
-def shingles_expr(text_col: str, n: int) -> Column:
-    """Token n-gram shingles as array<string>.
-
-    NOTE: higher-order ``transform`` lambdas run interpreted (no codegen)
-    and re-evaluate outer expressions per element — fine for small arrays /
-    unit tests; hot paths should use :func:`shingle_rows` (explode shape,
-    fully codegen'd) instead.
-    """
-    return F.expr(
-        f"transform(sequence(1, greatest(size(split({text_col}, ' ')) - {n} + 1, 1)), "
-        f"i -> concat_ws(' ', slice(split({text_col}, ' '), i, {n})))"
-    )
-
-
 def shingle_rows(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
@@ -89,15 +75,6 @@ def shingle_rows(
 
 
 # ── n-gram Jaccard (exact set-similarity join, prefix-filtered) ──────────
-
-
-def jaccard_expr(a: str, b: str) -> Column:
-    """Set Jaccard over two array columns (distinct semantics, matching
-    DuckDB list_intersect/list_distinct for oracle parity)."""
-    return F.expr(
-        f"CAST(size(array_intersect({a}, {b})) AS DOUBLE) / "
-        f"CAST(size(array_union({a}, {b})) AS DOUBLE)"
-    )
 
 
 def _verify_jaccard_by_counts(

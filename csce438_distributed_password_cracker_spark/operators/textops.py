@@ -439,20 +439,6 @@ def token_counts(
     )
 
 
-def char_shingle_hashes_sql(text_col: str, k: int = 8, seed: int = 42) -> str:
-    """SQL for array<bigint> of hashed character k-grams (rolling-hash
-    analog, computed positionally — same fingerprint algebra,
-    shuffle-free)."""
-    return (
-        f"transform(sequence(1, greatest(length({text_col}) - {k} + 1, 1)), "
-        f"i -> xxhash64(substring({text_col}, i, {k}), {seed}))"
-    )
-
-
-def char_shingle_hashes(text_col: str, k: int = 8, seed: int = 42) -> Column:
-    return F.expr(char_shingle_hashes_sql(text_col, k, seed))
-
-
 def fingerprint(
     df: DataFrame,
     id_col: str,

@@ -47,17 +47,21 @@ def keyspace(
     upper_ord: int | None = None,
     column: str = "candidate",
     with_ordinal: bool = False,
+    _num_partitions: int | None = None,
 ) -> DataFrame:
     """DataFrame of fixed-``width`` lowercase candidates with ordinals in
     ``[lower_ord, upper_ord]`` (inclusive, mirroring the reference's
     inclusive bounds, worker.c:93-96). Defaults to the full space
-    a^width..z^width (request.c:40-47)."""
+    a^width..z^width (request.c:40-47).  ``_num_partitions`` (internal)
+    overrides :func:`num_partitions_for` — the crack scan's window
+    layout, operators/crack.py."""
     n = codec.keyspace_size(width)
     hi = n - 1 if upper_ord is None else upper_ord
     if not (0 <= lower_ord <= hi < n):
         raise ValueError(f"bad ordinal range [{lower_ord}, {hi}] for width {width}")
     count = hi - lower_ord + 1
-    df = spark.range(lower_ord, hi + 1, 1, num_partitions_for(count, spark))
+    parts = _num_partitions or num_partitions_for(count, spark)
+    df = spark.range(lower_ord, hi + 1, 1, parts)
     decoded = df.selectExpr(
         "id AS ordinal", f"{codec.decode_sql('id', width)} AS {column}"
     )

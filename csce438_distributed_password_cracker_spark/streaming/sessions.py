@@ -15,7 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 DEFAULT_GAP = "10 seconds"  # 5 epochs x 2 s (api.h / lsp_server.c defaults)
 DEFAULT_WATERMARK = "30 seconds"
@@ -69,15 +68,4 @@ def tumbling(
         .select(
             F.col("window.start").alias("window_start"), "n_events", "window_value"
         )
-    )
-
-
-def seqnum_audit(events: DataFrame, conn_col: str = "user_id") -> DataFrame:
-    """Batch form of the T3 in-order/exactly-once audit (accept check
-    lsp_server.c:241-249): per-connection gap and duplicate detection via
-    lag().  The *streaming* form is streaming/stateful.py (per-key state =
-    last-seen seqnum)."""
-    w = Window.partitionBy(conn_col).orderBy("event_id")
-    return events.select(F.col(conn_col).alias("connid"), "event_id").withColumn(
-        "gap", F.col("event_id") - F.lag("event_id").over(w)
     )

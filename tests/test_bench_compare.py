@@ -210,6 +210,21 @@ def test_bench_last_write_failure_only_warns(tmp_path, capsys):
     assert target.read_text() == '{"metric": 1}\n'
 
 
+def test_bench_detail_write_failure_only_warns(tmp_path, capsys):
+    """The BENCH_detail_latest.json write is the last step of a finished
+    run too: an unwritable detail path (here a directory) warns on
+    stderr instead of raising."""
+    import json
+
+    import bench
+
+    bench.write_detail({"samples": {}}, str(tmp_path))
+    assert "could not write" in capsys.readouterr().err
+    target = tmp_path / "detail.json"
+    bench.write_detail({"samples": {}}, str(target))
+    assert json.loads(target.read_text()) == {"samples": {}}
+
+
 def test_aggregate_catches_distributed_drift():
     """Twenty 0.8 s same-direction risers each pass the per-entry dual
     threshold (0.8 < 1.0 abs) but sum to a 16 s total regression — the

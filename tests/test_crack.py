@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
+
+from csce438_distributed_password_cracker_spark.functions import codec
 from csce438_distributed_password_cracker_spark.operators import crack as crack_mod
 
 # Pinned golden rows (FIXTURES.md §1) — sha1 of known plains.
@@ -16,6 +19,47 @@ GOLDEN_SHA1 = {
 }
 # Negative control: digest with no preimage in any a-z^len space.
 MISS_SHA1 = "55d74de7f828993f5286676cbe8c4774396da193"
+
+
+def _job_partitions(spark, group: str) -> list[list[int]]:
+    """The partition ids each job of job group ``group`` ran, one sorted
+    list per job, in submission order (read from the status store after
+    the listener bus has drained)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    st = sc.statusTracker()
+    jobs = []
+    for jid in sorted(st.getJobIdsForGroup(group)):
+        ran = []
+        for sid in st.getJobInfo(jid).stageIds:
+            attempt = store.lastStageAttempt(sid).attemptId()
+            tasks = store.taskList(sid, attempt, 1 << 20)
+            ran += [tasks.apply(i).partitionId() for i in range(tasks.size())]
+        jobs.append(sorted(ran))
+    return jobs
+
+
+def _run_in_group(spark, group: str, fn, *args, **kwargs):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        return fn(spark, *args, **kwargs)
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def _window_edges(lo: int, count: int, parts: int, cores: int) -> list[tuple[int, int]]:
+    """[first, last] ordinal of each window of a scan over ``count``
+    ordinals from ``lo`` in ``parts`` partitions (spark.range puts
+    partition i at ``lo + i * count // parts``), empty windows left out."""
+    edges = []
+    for w in range(parts // cores):
+        first = lo + w * cores * count // parts
+        last = lo + (w + 1) * cores * count // parts - 1
+        if first <= last:
+            edges.append((first, last))
+    return edges
 
 
 def test_golden_digests_are_sha1():
@@ -46,9 +90,8 @@ def test_crack_miss(spark):
 
 
 def test_early_stop_equals_global_min(spark):
-    # 'code' sits mid-space (ordinal 2*26^3+14*26^2+3*26+4): the probe's
-    # take waves must still land on the deterministic min, and the prefix
-    # confirm pass must agree.
+    # 'code' sits mid-space (ordinal 2*26^3+14*26^2+3*26+4): the windowed
+    # scan must still land on the deterministic min.
     res = crack_mod.crack(spark, GOLDEN_SHA1["code"], 4)
     assert res.found and res.password == "code"
     # the probe row must equal the full-aggregation min — the A2 contract
@@ -59,12 +102,12 @@ def test_early_stop_equals_global_min(spark):
 def test_early_hit_skips_remaining_work(spark):
     """VERDICT r1 #6: a width-6 hit in an early partition must finish
     measurably faster than the verdict-complete full scan (308.9M
-    candidates), same verdict — the incremental take never launches the
+    candidates), same verdict — the windowed scan never launches the
     rest of the space."""
     import hashlib
     import time
 
-    plain = "aaaabc"  # ordinal 53: first take wave (1 partition) finds it
+    plain = "aaaabc"  # ordinal 53: the first window finds it
     digest = hashlib.sha1(plain.encode()).hexdigest()
 
     t0 = time.monotonic()
@@ -95,11 +138,10 @@ def test_sha1_format_matches_reference(spark):
 def test_early_hit_launches_prefix_of_tasks_only(spark):
     """crack()'s early termination is a LAUNCH property, not a cancel
     property: a hit at a tiny ordinal must leave almost the whole
-    keyspace unlaunched (executeTake submits partition waves
-    incrementally and stops when a row arrives).  Pin it with the
-    status tracker so a Spark upgrade that changes executeTake's
-    incremental submission shows up as a test failure, not a silent
-    full-space scan."""
+    keyspace unlaunched (windows are submitted one job at a time and the
+    scan stops at the first window with a match).  Pinned from the
+    status store so a change that scans the whole space shows up as a
+    test failure, not as silent extra work."""
     from csce438_distributed_password_cracker_spark.sources.keyspace import (
         keyspace,
     )
@@ -108,30 +150,15 @@ def test_early_hit_launches_prefix_of_tasks_only(spark):
     total_parts = keyspace(spark, 6).rdd.getNumPartitions()
     assert total_parts >= 20, "width-6 space should span many partitions"
 
-    target = hashlib.sha1(b"aaaaab").hexdigest()  # ordinal 1: first wave
-    sc.setJobGroup("earlystop_probe", "crack early-stop launch assertion")
-    try:
-        res = crack_mod.crack(spark, target, 6)
-    finally:
-        sc.setJobGroup(None, None)
+    target = hashlib.sha1(b"aaaaab").hexdigest()  # ordinal 1: first window
+    res = _run_in_group(spark, "earlystop_probe", crack_mod.crack, target, 6)
     assert res.reply == "f aaaaab"
 
-    st = sc.statusTracker()
-    job_ids = st.getJobIdsForGroup("earlystop_probe")
-    assert job_ids, "probe jobs not visible in the status tracker"
-    launched = 0
-    for jid in job_ids:
-        info = st.getJobInfo(jid)
-        if info is None:
-            continue
-        for sid in info.stageIds:
-            sinfo = st.getStageInfo(sid)
-            if sinfo is not None:
-                launched += sinfo.numTasks
-    # the first take wave is 1 partition (+ scaleUpFactor growth only if
-    # it came back empty); an early hit must stay far below the space
-    assert 1 <= launched <= 5, (
-        f"expected a 1-2 wave prefix, launched {launched} of {total_parts}"
+    jobs = _job_partitions(spark, "earlystop_probe")
+    launched = sum(map(len, jobs))
+    # exactly one window: one task per core, the rest never launched
+    assert launched == sc.defaultParallelism, (
+        f"expected one window, launched {launched} of {total_parts}"
     )
 
 
@@ -143,7 +170,6 @@ def test_width7_crack_past_reference_uint32_ceiling(spark):
     crack must (a) decode ordinals beyond 2^32 correctly and (b) find a
     preimage in a targeted high-ordinal window — the overflow divergence
     proven as behavior, not just documented."""
-    from csce438_distributed_password_cracker_spark.functions import codec
     from csce438_distributed_password_cracker_spark.operators.crack import (
         crack_verdict_df,
     )
@@ -176,11 +202,10 @@ def test_width7_crack_past_reference_uint32_ceiling(spark):
 
 def test_width7_full_space_early_hit_stays_prefix_launched(spark):
     """Full-space width-7 crack with an early preimage: partition sizing
-    at 26^7 (~2000 tasks of ~4M ordinals) must combine with
-    executeTake's incremental launch so the hit costs ONE wave, not an
-    8-billion-candidate scan — the scale knob (CANDIDATES_PER_TASK)
-    and the early-stop property working together past the reference's
-    ceiling."""
+    at 26^7 (~2000 tasks of ~4M ordinals) must combine with the windowed
+    scan so the hit costs ONE window, not an 8-billion-candidate scan —
+    the scale knob (CANDIDATES_PER_TASK) and the early-stop property
+    working together past the reference's ceiling."""
     from csce438_distributed_password_cracker_spark.sources.keyspace import (
         keyspace,
     )
@@ -189,26 +214,13 @@ def test_width7_full_space_early_hit_stays_prefix_launched(spark):
     total_parts = keyspace(spark, 7).rdd.getNumPartitions()
     assert total_parts >= 1000, "width-7 space should span ~2k partitions"
 
-    target = hashlib.sha1(b"aaaaaab").hexdigest()  # ordinal 1: first wave
-    sc.setJobGroup("earlystop_w7", "width-7 early-stop launch assertion")
-    try:
-        res = crack_mod.crack(spark, target, 7)
-    finally:
-        sc.setJobGroup(None, None)
+    target = hashlib.sha1(b"aaaaaab").hexdigest()  # ordinal 1: first window
+    res = _run_in_group(spark, "earlystop_w7", crack_mod.crack, target, 7)
     assert res.reply == "f aaaaaab"
 
-    st = sc.statusTracker()
-    launched = 0
-    for jid in st.getJobIdsForGroup("earlystop_w7"):
-        info = st.getJobInfo(jid)
-        if info is None:
-            continue
-        for sid in info.stageIds:
-            sinfo = st.getStageInfo(sid)
-            if sinfo is not None:
-                launched += sinfo.numTasks
-    assert 1 <= launched <= 5, (
-        f"expected a 1-2 wave prefix, launched {launched} of {total_parts}"
+    launched = sum(map(len, _job_partitions(spark, "earlystop_w7")))
+    assert launched == sc.defaultParallelism, (
+        f"expected one window, launched {launched} of {total_parts}"
     )
 
 
@@ -220,13 +232,9 @@ def test_width8_envelope_chunked_loop_early_stop(spark):
     ordinal past 2^32, i.e. past the reference's uint32 ceiling —
     must (a) answer the reference's 'f <pass>' verdict
     (server.c:251-262), (b) stop SUBMITTING chunks after the hit
-    chunk, and (c) stay a ≤2-wave launch inside the hit chunk."""
-    from csce438_distributed_password_cracker_spark.functions import codec
+    chunk, and (c) launch one window inside the hit chunk."""
     from csce438_distributed_password_cracker_spark.operators.crack import (
         crack_chunked,
-    )
-    from csce438_distributed_password_cracker_spark.sources.keyspace import (
-        num_partitions_for,
     )
 
     n = codec.keyspace_size(8)
@@ -236,40 +244,27 @@ def test_width8_envelope_chunked_loop_early_stop(spark):
     lo = n - 5 * chunk  # 5-chunk envelope at the very top of the space
     assert lo > 2**32
     # preimage early in the SECOND chunk: chunk 1 must exhaust (full
-    # scan), chunk 2 must hit in its first take wave, chunks 3-5 must
+    # scan), chunk 2 must hit in its first window, chunks 3-5 must
     # never be submitted
     target_ord = lo + chunk + 10_000
     preimage = codec.py_decode(target_ord, 8)
     assert codec.py_encode(preimage) == target_ord  # int64-exact codec
     digest = hashlib.sha1(preimage.encode()).hexdigest()
 
-    sc = spark.sparkContext
-    per_chunk_parts = num_partitions_for(chunk, spark)
-    sc.setJobGroup("w8_chunked", "width-8 chunked-loop launch assertion")
-    try:
-        res = crack_chunked(
-            spark, digest, 8, lower_ord=lo, upper_ord=n - 1,
-            chunk_ordinals=chunk,
-        )
-    finally:
-        sc.setJobGroup(None, None)
+    cores = spark.sparkContext.defaultParallelism
+    per_chunk_parts = crack_mod._scan_partitions(spark, chunk)
+    res = _run_in_group(
+        spark, "w8_chunked", crack_chunked, digest, 8,
+        lower_ord=lo, upper_ord=n - 1, chunk_ordinals=chunk,
+    )
     assert res.reply == f"f {preimage}"  # server.c:251-256 hit reply
 
-    st = sc.statusTracker()
-    launched = 0
-    for jid in st.getJobIdsForGroup("w8_chunked"):
-        info = st.getJobInfo(jid)
-        if info is None:
-            continue
-        for sid in info.stageIds:
-            sinfo = st.getStageInfo(sid)
-            if sinfo is not None:
-                launched += sinfo.numTasks
+    launched = sum(map(len, _job_partitions(spark, "w8_chunked")))
     # chunk 1 exhausts all its partitions; chunk 2's hit sits in its
-    # first partition, so executeTake stops after ≤2 waves (≤5 tasks);
-    # the 3 unsubmitted chunks would have added 3×per_chunk_parts more
-    assert per_chunk_parts <= launched <= per_chunk_parts + 5, (
-        f"expected one exhausted chunk + a ≤2-wave prefix, launched "
+    # first window, so one window (one task per core) runs there; the 3
+    # unsubmitted chunks would have added 3×per_chunk_parts more
+    assert launched == per_chunk_parts + cores, (
+        f"expected one exhausted chunk + one window, launched "
         f"{launched} tasks ({per_chunk_parts} per chunk, 5 chunks)"
     )
 
@@ -295,9 +290,8 @@ def test_width9_beyond_cap_chunked_recipe(spark):
     Then crack_chunked over a 5-chunk window at the top of the space
     with the preimage planted early in chunk 2 must (a) answer
     'f <pass>', (b) never submit chunks 3-5 (§4.4 waste bound: < one
-    chunk of ordinals past the hit), (c) stay a ≤2-wave launch inside
-    the hit chunk."""
-    from csce438_distributed_password_cracker_spark.functions import codec
+    chunk of ordinals past the hit), (c) launch one window inside the
+    hit chunk."""
     from csce438_distributed_password_cracker_spark.operators.crack import (
         crack_chunked,
     )
@@ -323,32 +317,77 @@ def test_width9_beyond_cap_chunked_recipe(spark):
     assert codec.py_encode(preimage) == target_ord
     digest = hashlib.sha1(preimage.encode()).hexdigest()
 
-    sc = spark.sparkContext
-    per_chunk_parts = num_partitions_for(chunk, spark)
-    sc.setJobGroup("w9_chunked", "width-9 chunked-loop launch assertion")
-    try:
-        res = crack_chunked(
-            spark, digest, 9, lower_ord=lo, upper_ord=n - 1,
-            chunk_ordinals=chunk,
-        )
-    finally:
-        sc.setJobGroup(None, None)
+    cores = spark.sparkContext.defaultParallelism
+    per_chunk_parts = crack_mod._scan_partitions(spark, chunk)
+    res = _run_in_group(
+        spark, "w9_chunked", crack_chunked, digest, 9,
+        lower_ord=lo, upper_ord=n - 1, chunk_ordinals=chunk,
+    )
     assert res.reply == f"f {preimage}"
 
-    st = sc.statusTracker()
-    launched = 0
-    for jid in st.getJobIdsForGroup("w9_chunked"):
-        info = st.getJobInfo(jid)
-        if info is None:
-            continue
-        for sid in info.stageIds:
-            sinfo = st.getStageInfo(sid)
-            if sinfo is not None:
-                launched += sinfo.numTasks
+    launched = sum(map(len, _job_partitions(spark, "w9_chunked")))
     # waste profile: chunk 1 exhausts (per_chunk_parts tasks), chunk 2
-    # stops after ≤2 executeTake waves, chunks 3-5 (3×per_chunk_parts
-    # tasks) are never submitted
-    assert per_chunk_parts <= launched <= per_chunk_parts + 5, (
-        f"expected one exhausted chunk + a ≤2-wave prefix, launched "
+    # runs one window, chunks 3-5 (3×per_chunk_parts tasks) are never
+    # submitted
+    assert launched == per_chunk_parts + cores, (
+        f"expected one exhausted chunk + one window, launched "
         f"{launched} tasks ({per_chunk_parts} per chunk, 5 chunks)"
     )
+
+
+def test_window_shape_hit_in_window_k_runs_k_jobs(spark):
+    """The scan shape: a hit in window k runs exactly k jobs, job w
+    running window w's ``defaultParallelism`` partitions, and a miss
+    runs every partition exactly once, window by window in ascending
+    order."""
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    n = codec.keyspace_size(5)
+    parts = crack_mod._scan_partitions(spark, n)
+    assert parts % cores == 0 and parts // cores >= crack_mod.MIN_WINDOWS
+    windows = [list(range(w, w + cores)) for w in range(0, parts, cores)]
+
+    # the last ordinal of window k: every earlier window comes back empty
+    for k, (_, last) in enumerate(_window_edges(0, n, parts, cores), start=1):
+        plain = codec.py_decode(last, 5)
+        digest = hashlib.sha1(plain.encode()).hexdigest()
+        group = f"window_hit_{k}"
+        res = _run_in_group(spark, group, crack_mod.crack, digest, 5)
+        assert res.password == plain
+        assert _job_partitions(spark, group) == windows[:k]
+
+    res = _run_in_group(spark, "window_miss", crack_mod.crack, MISS_SHA1, 5)
+    assert res.reply == "x"
+    assert _job_partitions(spark, "window_miss") == windows
+
+
+@pytest.mark.parametrize("width", [1, 2, 3, 4, 5])
+def test_crack_equals_verdict_min_at_window_edges(spark, width):
+    """crack() answers crack_verdict_df's min (A2) at the first and last
+    ordinal of every window and of the space.  Width 1 has more
+    partitions than ordinals on a wide host, so some partitions are
+    empty."""
+    n = codec.keyspace_size(width)
+    parts = crack_mod._scan_partitions(spark, n)
+    cores = spark.sparkContext.defaultParallelism
+    edges = {0, n - 1}
+    for first, last in _window_edges(0, n, parts, cores):
+        edges |= {first, last}
+    for ordinal in sorted(edges):
+        plain = codec.py_decode(ordinal, width)
+        digest = hashlib.sha1(plain.encode()).hexdigest()
+        verdict = crack_mod.crack_verdict_df(spark, digest, width).first()
+        assert verdict["password"] == plain
+        assert crack_mod.crack(spark, digest, width).password == verdict["password"]
+
+
+def test_collect_partitions_reads_only_the_given_partitions(spark):
+    """The private job route under _first_match (PythonRDD.runJob over
+    javaToPython(), rows read back with _load_from_socket) returns the
+    rows of exactly the partitions asked for, in partition order — so a
+    PySpark upgrade that moves or changes it fails here, loudly."""
+    df = spark.range(0, 100, 1, 10).selectExpr("id AS ordinal", "id * 2 AS twice")
+    rows = crack_mod._collect_partitions(spark, df._jdf.javaToPython(), [2, 7])
+    assert [r["ordinal"] for r in rows] == [*range(20, 30), *range(70, 80)]
+    assert all(r["twice"] == 2 * r["ordinal"] for r in rows)
+    assert crack_mod._collect_partitions(spark, df._jdf.javaToPython(), []) == []
