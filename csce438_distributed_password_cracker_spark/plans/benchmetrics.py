@@ -84,13 +84,10 @@ class StageMetricsTracker:
 
     def _drain_listener_bus(self) -> None:
         """Block until queued listener events are processed, so the stages
-        of the query that just returned are visible in the store.  The
-        no-arg overload exists on Spark 3.1+; degrade to a no-op rather
-        than fail the bench if a future Spark hides it."""
-        try:
-            self._sc._jsc.sc().listenerBus().waitUntilEmpty()
-        except Exception:  # pragma: no cover - version drift guard
-            pass
+        of the query that just returned are visible in the store.  A
+        failed drain raises: skipping it would under-report the stages
+        whose completion events are still queued."""
+        self._sc._jsc.sc().listenerBus().waitUntilEmpty()
 
     def delta(self) -> dict[str, float]:
         """Metrics of terminal stage attempts not yet accounted.

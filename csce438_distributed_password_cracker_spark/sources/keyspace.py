@@ -33,9 +33,10 @@ def num_partitions_for(count: int, spark: SparkSession) -> int:
     the degenerate widths).  The cap binds above ~4e12 ordinals
     (width ≥ 9), where per-task size grows past the target — width 9 is
     ~5.4M ordinals/task at the cap, width 10 ~141M (minutes of SHA per
-    task).  Beyond that, drive the search as a chunked ordinal loop
-    (crack_verdict_df over successive [lo, hi] windows — the SURVEY
-    §4.4 recipe), which also bounds wasted work on a hit."""
+    task).  Beyond that, drive the search with
+    ``operators.crack.crack_chunked``: the windowed crack scan over
+    successive [lo, hi] chunks (the SURVEY §4.4 recipe), which also
+    bounds wasted work on a hit."""
     base = max(1, min(count // CANDIDATES_PER_TASK + 1, 1_000_000))
     return max(base, min(spark.sparkContext.defaultParallelism, count))
 

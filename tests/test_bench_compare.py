@@ -9,6 +9,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
@@ -16,6 +18,10 @@ import bench_compare  # noqa: E402
 
 R09 = os.path.join(REPO, "BENCH_detail_r09.json")
 ANCHOR = os.path.join(REPO, "BENCH_detail_r09_anchor.json")
+R12_FINAL = os.path.join(REPO, "BENCH_detail_r12_final.json")
+#: detail-file keys that stay off the stdout line; ``sketch_mode`` is a
+#: retired key that only committed files still carry
+DETAIL_ONLY = {"samples", "operator_samples", "metric_samples", "sketch_mode"}
 
 
 def _load(p):
@@ -33,15 +39,15 @@ def test_anchor_vs_close_matches_the_verdicts_findings():
     """The r9 judge hand-verified: shuffle MB identical to rounding on
     all 50 entries; CPU within noise except the listing-tag improvement
     (q_ann_probe family) and live-stream attribution noise.  The tool
-    must reproduce exactly that: zero shuffle flags, no q_stream_live
-    CPU flag (excluded as documented noise), and the CPU flags it does
-    raise are the known anchor-vs-close deltas."""
+    must reproduce exactly that: zero shuffle flags, and the CPU flags
+    it raises are the known anchor-vs-close deltas, q_stream_live's
+    -5.9 s swing on that host included (only q_stream_audit's CPU is
+    skipped)."""
     res = bench_compare.compare(_load(ANCHOR), _load(R09))
     kinds = {f[0] for f in res["flags"]}
     assert "shuffle_mb" not in kinds, res["flags"]
     assert "evictions" not in kinds
     flagged = {f[1] for f in res["flags"] if f[0] == "cpu"}
-    assert "q_stream_live" not in flagged  # default-excluded noise
     # the committed pair's known CPU deltas (improvements + one noise
     # riser) — a CHANGE here means the committed files changed
     assert flagged == {
@@ -49,6 +55,7 @@ def test_anchor_vs_close_matches_the_verdicts_findings():
         "q_collocations",
         "q_dedup_jaccard",
         "q_keyspace_algebra",
+        "q_stream_live",
         "semantic_dedup",
     }, res["flags"]
 
@@ -108,50 +115,41 @@ def test_combined_basis_catches_jvm_to_python_shift():
     assert res["flags"] == [("cpu", "q", 7.0, 8.5, 1.5)]
 
 
-def test_bounded_entry_uses_measured_swing_not_dual_threshold():
-    """q_crack_verdicts' CPU is inherently nondeterministic (speculative
-    wave-launch count before the early-termination hit): swings within
-    the measured ±3.5 s bound must not flag; past it they must."""
+def test_formerly_exempt_entries_use_the_dual_threshold():
+    """The eight entries that once carried a noise exemption (a swing
+    bound, or no per-entry CPU compare for two live streams) are judged
+    like every other entry: a delta within 20 % does not flag, one past
+    both 20 % and 1.0 s does."""
     base = {"queries_cpu_median": {}, "queries_shuffle_mb": {}}
-    old = {**base, "queries_cpu_median": {"q_crack_verdicts": 10.0}}
-    within = {**base, "queries_cpu_median": {"q_crack_verdicts": 13.0}}
-    past = {**base, "queries_cpu_median": {"q_crack_verdicts": 14.0}}
-    assert bench_compare.compare(old, within)["flags"] == []
-    res = bench_compare.compare(old, past)
-    assert res["flags"] == [("cpu", "q_crack_verdicts", 10.0, 14.0, 4.0)]
-    # the bound is the committed constant the docs state
-    assert bench_compare.CPU_BOUNDED["q_crack_verdicts"] == 3.5
-
-
-def test_round12_bounded_entries_carry_measured_bounds():
-    """The three round-12 documented-noise entries (VERDICT r11 #4/#6
-    plus q_crack_batch's bimodal window): swings within their measured
-    bounds must not flag; a real plan regression past the bound must."""
-    base = {"queries_cpu_median": {}, "queries_shuffle_mb": {}}
-    for entry, bound, which in (
-        ("q_dedup_exact", 3.5, "queries_cpu_median"),
-        ("q_crack_batch", 4.0, "queries_cpu_median"),
-        ("clf_score", 2.0, "operators_cpu_median"),
-        ("substring_ingest_probe", 5.0, "operators_cpu_median"),
-        ("paradedup_ingest_probe", 4.0, "operators_cpu_median"),
+    for entry, which in (
+        ("q_crack_verdicts", "queries_cpu_median"),
+        ("q_crack_batch", "queries_cpu_median"),
+        ("q_dedup_exact", "queries_cpu_median"),
+        ("q_stream_live", "queries_cpu_median"),
+        ("q_stream_stateful", "queries_cpu_median"),
+        ("clf_score", "operators_cpu_median"),
+        ("substring_ingest_probe", "operators_cpu_median"),
+        ("paradedup_ingest_probe", "operators_cpu_median"),
     ):
-        assert bench_compare.CPU_BOUNDED[entry] == bound
         old = {**base, which: {entry: 10.0}}
-        within = {**base, which: {entry: 10.0 + bound - 0.1}}
-        past = {**base, which: {entry: 10.0 + bound + 0.5}}
+        within = {**base, which: {entry: 11.9}}
+        past = {**base, which: {entry: 12.5}}
         assert bench_compare.compare(old, within)["flags"] == [], entry
-        # per-entry flags only: in this single-entry fixture the
-        # aggregate cpu_total row trivially mirrors the entry (a real
-        # file's aggregate has its own 5%+5s thresholds over all
-        # entries)
-        flags = [
-            f
-            for f in bench_compare.compare(old, past)["flags"]
-            if f[0] == "cpu"
-        ]
-        assert flags == [
-            ("cpu", entry, 10.0, round(10.0 + bound + 0.5, 3), round(bound + 0.5, 3))
+        assert bench_compare.compare(old, past)["flags"] == [
+            ("cpu", entry, 10.0, 12.5, 2.5)
         ], entry
+
+
+def test_noisy_entry_cpu_skipped_unless_included():
+    """A CPU_NOISY entry's CPU is left out of the per-entry and total
+    rows by default; --include-noisy compares it like any other."""
+    assert bench_compare.CPU_NOISY == {"q_stream_audit"}
+    old = {"queries_cpu_median": {"q_stream_audit": 2.0}}
+    new = {"queries_cpu_median": {"q_stream_audit": 3.4}}
+    assert bench_compare.compare(old, new)["flags"] == []
+    assert bench_compare.compare(old, new, include_noisy=True)["flags"] == [
+        ("cpu", "q_stream_audit", 2.0, 3.4, 1.4)
+    ]
 
 
 def test_bench_cli_writes_bench_last_equal_to_stdout(tmp_path):
@@ -174,7 +172,7 @@ def test_bench_cli_writes_bench_last_equal_to_stdout(tmp_path):
         "SPARK_GRAFT_CPUS": "4",
         "SPARK_GRAFT_BENCH_ONLY": "q_events_scan",
         "SPARK_GRAFT_BENCH_RUNS": "1",
-        "SPARK_GRAFT_BENCH_DETAIL": "",
+        "SPARK_GRAFT_BENCH_DETAIL": str(tmp_path / "detail.json"),
     }
     proc = subprocess.run(
         [sys.executable, os.path.join(repo, "bench.py")],
@@ -194,6 +192,47 @@ def test_bench_cli_writes_bench_last_equal_to_stdout(tmp_path):
     assert persisted == line
     payload = json.loads(persisted)
     assert payload["queries"].keys() == {"q_events_scan"}
+    # the same keys a full committed run carries
+    assert payload.keys() == _load(R12_FINAL).keys() - DETAIL_ONLY
+    # the detail file's records alone rebuild every summary map
+    import bench
+
+    detail = json.loads((tmp_path / "detail.json").read_text())
+    assert detail["samples"].keys() == {"q_events_scan"}
+    assert detail["operator_samples"] == {}
+    summary = bench.summarize(detail["metric_samples"], {"q_events_scan"})
+    assert summary == {k: payload[k] for k in summary}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "BENCH_detail_r11_final.json",
+        "BENCH_detail_r12_close.json",
+        "BENCH_detail_r12_final.json",
+    ],
+)
+def test_summarize_rebuilds_committed_summaries(name):
+    """bench.summarize over the raw per-pass samples of a committed full
+    run reproduces every summary map and total of that file exactly:
+    min/median per field to 3 places, shuffle MB as the sum of the read
+    and write medians, totals as sums of the rounded values."""
+    import bench
+
+    d = _load(os.path.join(REPO, name))
+    walls = {**d["samples"], **d["operator_samples"]}
+    records = {
+        n: [{**m, "wall_sec": w} for w, m in zip(walls[n], ms, strict=True)]
+        for n, ms in d["metric_samples"].items()
+    }
+    summary = bench.summarize(records, set(d["samples"]))
+    expected = {
+        k: v
+        for k, v in d.items()
+        if k.startswith(("queries", "operators", "total_"))
+        or k in ("value", "evictions")
+    }
+    assert summary == expected
 
 
 def test_bench_last_write_failure_only_warns(tmp_path, capsys):

@@ -5,6 +5,7 @@ query and never silently under-report."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from csce438_distributed_password_cracker_spark.plans.benchmetrics import (
@@ -113,3 +114,29 @@ def test_shuffle_bytes_deterministic_across_repeats(spark):
     a, b = run(), run()
     assert a["shuffle_write_bytes"] == b["shuffle_write_bytes"]
     assert a["shuffle_read_bytes"] == b["shuffle_read_bytes"]
+
+
+def test_failed_listener_drain_raises():
+    """A drain that fails must fail delta(): carrying on would read the
+    store before the finished query's stage events land, and report
+    too little work."""
+
+    class _Bus:
+        def waitUntilEmpty(self):
+            raise RuntimeError("listener bus unavailable")
+
+    class _Sc:
+        def listenerBus(self):
+            return _Bus()
+
+    class _Jsc:
+        def sc(self):
+            return _Sc()
+
+    class _Context:
+        _jsc = _Jsc()
+
+    tracker = object.__new__(StageMetricsTracker)
+    tracker._sc = _Context()
+    with pytest.raises(RuntimeError, match="listener bus unavailable"):
+        tracker.delta()

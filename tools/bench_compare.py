@@ -10,10 +10,7 @@ with a table when anything moved:
   the delta exceeds BOTH ``--cpu-pct`` (default 20%) and ``--cpu-abs``
   (default 1.0 s).  Both directions are flagged — an unexplained
   improvement is a basis hole (work moved somewhere unmeasured) until
-  attributed; ``--regressions-only`` limits to increases.  Entries in
-  ``CPU_BOUNDED`` (inherently nondeterministic cost, e.g.
-  q_crack_verdicts' speculative wave count) flag only past their
-  measured swing bound instead.
+  attributed; ``--regressions-only`` limits to increases.
 - **CPU totals** (``cpu_total`` rows): the per-family sum over shared,
   non-noisy entries is compared with its own thresholds (``--agg-pct``
   default 5%, ``--agg-abs`` default 5 s) so many small same-direction
@@ -25,13 +22,10 @@ with a table when anything moved:
 - **Evictions**: nonzero in either file invalidates that file's CPU
   numbers outright.
 
-Per-query CPU for the live-stream entries (``CPU_NOISY``) is skipped by
-default: micro-batch machinery completes stages across timing windows,
-so their per-query CPU medians swing several seconds within a single
-run (BASELINE.md §C.13 attribution caveat; q_stream_live spans 5.7–15.6
-CPU-s across passes in BENCH_detail_r09).  Their shuffle MB is still
-compared — it stays flat when the plan does.  ``--include-noisy``
-restores them.
+Per-query CPU for the entries in ``CPU_NOISY`` is skipped by default:
+their CPU swings past the thresholds between runs of unchanged code.
+Their shuffle MB is still compared — it stays flat when the plan
+does.  ``--include-noisy`` restores them.
 
 Entries present in only one file are listed informationally (registry
 growth is expected) but do not fail the compare.
@@ -52,56 +46,12 @@ import argparse
 import json
 import sys
 
-#: live-stream entries whose per-query CPU attribution is documented
-#: noise (completion-time attribution across micro-batch windows)
-CPU_NOISY = frozenset({"q_stream_live", "q_stream_stateful", "q_stream_audit"})
-
-#: entries with an inherently nondeterministic CPU cost and a MEASURED
-#: noise bound (seconds): the per-entry dual threshold is replaced by
-#: |delta| > bound.  q_crack_verdicts' cost depends on how many
-#: speculative wave tasks launch before the early-termination hit lands
-#: — observed swing across r8-r10 passes is ±3 CPU-s on an identical
-#: plan (BASELINE.md §C.18; the r10 close's lone flag was its +1.8).
-#: The bound is asserted against the committed detail files in
-#: tests/test_bench_compare.py, so a real regression past it still
-#: flags.
-#:
-#: Round-12 additions (VERDICT r11 next #4/#6), each from the same-code
-#: run history r10→r12-start with identical shuffle MB throughout:
-#: - q_dedup_exact: contract-bound disk writes (rebuilds its pre-merge
-#:   snapshot each run by design); combined CPU walked 11.7 → 11.9 →
-#:   13.4 → 15.0 → 10.2 across five same-plan runs (max adjacent swing
-#:   3.1, plus a 24.5 s wall outlier pass in the r11 final bench) — the
-#:   corpus's noisiest heavy entry, flagged round-over-round three
-#:   times without a plan change.
-#: - clf_score: 2.9 → 2.7 → 2.2 → 4.0 → 3.2 → 3.0 — third alternating
-#:   flag in r11; ±1.8 observed on untouched code.
-#: - q_crack_batch: a FULL width-4 keyspace scan (deterministic work),
-#:   but its CPU window sat bimodally at ~8 or ~13-15 across full-
-#:   bench runs of identical plans (r11 close passes [12.7, 8.4, 8.0]
-#:   vs the next three runs' [12.1-15.6] cluster) with wall and
-#:   shuffle flat.  Round-12 root cause: whole-stage-codegen class
-#:   recompilation — the mode was whether its generated classes
-#:   survived the (default 100-entry) codegen cache between runs;
-#:   session.py now sizes the cache above the corpus and the entry
-#:   sits near its ~1-9 CPU work band.  The bound is kept for the
-#:   residual host noise and for compares against pre-fix files.
-#: - substring_ingest_probe / paradedup_ingest_probe: per-PASS combined
-#:   CPU is bimodal within a single run on identical index state
-#:   (substring replay passes [11.3, 20.2] in one session, round 12;
-#:   paradedup [7.4, 10.1, 10.1]); the apparent r10→r12 "drift"
-#:   (8.3 → 9.9 → 12.6) is median mode-sampling, not growth — shuffle
-#:   MB identical throughout.  Compacting the probe indexes to one
-#:   file per bucket was measured and made both entries WORSE
-#:   (substring 10.6 → 15.9 with clean controls) — rejected.
-CPU_BOUNDED: dict[str, float] = {
-    "q_crack_verdicts": 3.5,
-    "q_dedup_exact": 3.5,
-    "clf_score": 2.0,
-    "q_crack_batch": 4.0,
-    "substring_ingest_probe": 5.0,
-    "paradedup_ingest_probe": 4.0,
-}
+#: entries whose per-query CPU moves past the thresholds between runs of
+#: unchanged code; an entry stays only while same-host runs show it.
+#: q_stream_audit (micro-batch stages complete across timing windows):
+#: 2026-10-18, 4-core host, six same-host runs, combined CPU
+#: 2.04–3.41 s; one of the 15 run pairs flags it (+1.37 s, +67 %).
+CPU_NOISY = frozenset({"q_stream_audit"})
 
 
 def _combined_cpu(payload: dict, which: str) -> tuple[dict[str, float], str]:
@@ -162,14 +112,6 @@ def compare(
                 continue
             d = cpu_new[k] - cpu_old[k]
             if regressions_only and d <= 0:
-                continue
-            if k in CPU_BOUNDED:
-                # documented-noise entry: flag only past its measured
-                # swing bound (still both directions)
-                if abs(d) > CPU_BOUNDED[k]:
-                    flags.append(
-                        ("cpu", k, cpu_old[k], cpu_new[k], round(d, 3))
-                    )
                 continue
             if abs(d) > cpu_abs and abs(d) > cpu_pct / 100.0 * max(
                 cpu_old[k], 1e-9
