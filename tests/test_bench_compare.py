@@ -115,29 +115,68 @@ def test_combined_basis_catches_jvm_to_python_shift():
     assert res["flags"] == [("cpu", "q", 7.0, 8.5, 1.5)]
 
 
-def test_formerly_exempt_entries_use_the_dual_threshold():
-    """The eight entries that once carried a noise exemption (a swing
-    bound, or no per-entry CPU compare for two live streams) are judged
-    like every other entry: a delta within 20 % does not flag, one past
-    both 20 % and 1.0 s does."""
+def _assert_dual_threshold(entries, old_cpu=10.0):
+    """Each (entry, map) is judged by the default 20 % + 1.0 s rule: a
+    rise to just under 20 % does not flag, one past both does."""
     base = {"queries_cpu_median": {}, "queries_shuffle_mb": {}}
-    for entry, which in (
-        ("q_crack_verdicts", "queries_cpu_median"),
-        ("q_crack_batch", "queries_cpu_median"),
-        ("q_dedup_exact", "queries_cpu_median"),
-        ("q_stream_live", "queries_cpu_median"),
-        ("q_stream_stateful", "queries_cpu_median"),
-        ("clf_score", "operators_cpu_median"),
-        ("substring_ingest_probe", "operators_cpu_median"),
-        ("paradedup_ingest_probe", "operators_cpu_median"),
-    ):
-        old = {**base, which: {entry: 10.0}}
-        within = {**base, which: {entry: 11.9}}
-        past = {**base, which: {entry: 12.5}}
+    within_cpu = round(old_cpu * 1.19, 3)
+    past_cpu = round(old_cpu * 1.25, 3)
+    for entry, which in entries:
+        old = {**base, which: {entry: old_cpu}}
+        within = {**base, which: {entry: within_cpu}}
+        past = {**base, which: {entry: past_cpu}}
         assert bench_compare.compare(old, within)["flags"] == [], entry
         assert bench_compare.compare(old, past)["flags"] == [
-            ("cpu", entry, 10.0, 12.5, 2.5)
+            ("cpu", entry, old_cpu, past_cpu, round(past_cpu - old_cpu, 3))
         ], entry
+
+
+def test_bounded_entry_uses_measured_swing_not_dual_threshold():
+    """q_crack_verdicts' bound is its measured swing, and that swing
+    (0.40-0.69 combined CPU-s over six same-host runs, 2026-10-18) is
+    inside the default dual threshold, so no per-entry bound remains:
+    the stale 3.5 s swing bound is gone, a 3.0 s rise it let through
+    now flags, and the entry is judged by 20 % + 1.0 s."""
+    assert not hasattr(bench_compare, "CPU_BOUNDED")
+    base = {"queries_cpu_median": {}, "queries_shuffle_mb": {}}
+    old = {**base, "queries_cpu_median": {"q_crack_verdicts": 10.0}}
+    stale = {**base, "queries_cpu_median": {"q_crack_verdicts": 13.0}}
+    assert bench_compare.compare(old, stale)["flags"] == [
+        ("cpu", "q_crack_verdicts", 10.0, 13.0, 3.0)
+    ]
+    _assert_dual_threshold([("q_crack_verdicts", "queries_cpu_median")])
+
+
+def test_round12_bounded_entries_carry_measured_bounds():
+    """The five round-12 swing-bound entries were re-measured over six
+    same-host runs (2026-10-18); no pair of runs flagged any of them
+    under 20 % + 1.0 s, so the dual threshold is the bound they carry.
+    A rise just inside each old bound (2.0-5.0 s) now flags."""
+    base = {"queries_cpu_median": {}, "queries_shuffle_mb": {}}
+    entries = (
+        ("q_dedup_exact", 3.5, "queries_cpu_median"),
+        ("q_crack_batch", 4.0, "queries_cpu_median"),
+        ("clf_score", 2.0, "operators_cpu_median"),
+        ("substring_ingest_probe", 5.0, "operators_cpu_median"),
+        ("paradedup_ingest_probe", 4.0, "operators_cpu_median"),
+    )
+    for entry, old_bound, which in entries:
+        old = {**base, which: {entry: 5.0}}
+        stale = {**base, which: {entry: round(5.0 + old_bound - 0.1, 3)}}
+        flags = bench_compare.compare(old, stale)["flags"]
+        assert [f[:2] for f in flags if f[0] == "cpu"] == [("cpu", entry)], entry
+    _assert_dual_threshold([(e, which) for e, _, which in entries])
+
+
+def test_formerly_exempt_entries_use_the_dual_threshold():
+    """The two live-stream entries that once had no per-entry CPU
+    compare (CPU_NOISY) are judged like every other entry."""
+    _assert_dual_threshold(
+        [
+            ("q_stream_live", "queries_cpu_median"),
+            ("q_stream_stateful", "queries_cpu_median"),
+        ]
+    )
 
 
 def test_noisy_entry_cpu_skipped_unless_included():
