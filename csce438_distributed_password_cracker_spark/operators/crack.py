@@ -12,18 +12,26 @@ Semantics ported:
   deterministic, required for oracle hash-matching (SURVEY.md §2.5 A2).
 - early termination     = the coordinator hands every worker its range at
   once and answers on the first 'f' (server.c:387-434, worker.c:84-91).
-  ``crack`` scans in *windows*: the filtered keyspace is planned once over
-  ``cores × w`` contiguous ascending ordinal partitions (``w ≥ 4``,
-  :func:`_scan_partitions`), and each window of ``cores`` partitions —
-  one per core — is submitted as its own job, in ascending order.  The
-  scan stops after the first window that returns a row; later windows
-  are never launched, and no task is ever cancelled.
+  The scan (:func:`_first_match`) runs in *windows*: the filtered
+  keyspace is planned once over ``cores × w`` contiguous ascending
+  ordinal partitions (``w ≥ 4``, :func:`_scan_partitions`), and each
+  window of ``cores`` partitions — one per core — is submitted as its
+  own job, in ascending order.  Later windows are never launched once
+  the scan stops, and no task is ever cancelled.
+- one scan for a set of digests: the filter is ``hash IN (digests)`` and
+  every matching row carries the digest it matched, so one scan answers
+  every same-width request of a batch (streaming/requests.py).  A single
+  digest is the one-element set, which the optimizer plans as the plain
+  ``=`` filter.  The scan stops after the first window in which every
+  digest has matched at least once; a digest with no match (a miss)
+  keeps it running to the end of the space.
 
-Why the answer is the deterministic min (A2): windows ascend, each one is
-scanned in full, and every ordinal of a later window exceeds every
-ordinal of an earlier one.  So the lowest ordinal of the first non-empty
-window is the lowest match of the whole range.  tests/test_crack.py pins
-this against the full-aggregation min at every window boundary.
+Why each answer is the deterministic min (A2): windows ascend, each one
+is scanned in full, and every ordinal of a later window exceeds every
+ordinal of an earlier one.  So a digest's lowest ordinal in the first
+window where it matches is its lowest match in the whole range.
+tests/test_crack.py pins this against the full-aggregation min at every
+window boundary, for one digest and for a set.
 
 Why one plan: every window is a partition subset of the same DataFrame,
 so planning and whole-stage codegen happen once per request.  A
@@ -51,6 +59,7 @@ still costs the full scan — exactly the reference's exhaustion behavior
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from dataclasses import dataclass
 
 from pyspark.core.rdd import _load_from_socket
@@ -81,7 +90,7 @@ class CrackResult:
 
 def candidates_matching(
     spark: SparkSession,
-    digest: str,
+    digest: str | Iterable[str],
     width: int,
     lower_ord: int = 0,
     upper_ord: int | None = None,
@@ -90,17 +99,20 @@ def candidates_matching(
     _num_partitions: int | None = None,
 ) -> DataFrame:
     """All candidates in the (inclusive) ordinal range whose hash equals
-    ``digest``.  ``hash_func``: 'sha1' (reference fidelity, worker.c:50-54 —
-    F.sha1 emits the identical 40-char lowercase hex) or 'sha256' (oracle
-    path; pinned DuckDB lacks sha1, SURVEY.md §2.8 F1).
+    ``digest`` — one hex digest, or any of a collection of them — with
+    the lowercase hex digest each one matched as column ``digest``.
+    ``hash_func``: 'sha1' (reference fidelity, worker.c:50-54 — F.sha1
+    emits the identical 40-char lowercase hex) or 'sha256' (oracle path;
+    pinned DuckDB lacks sha1, SURVEY.md §2.8 F1).
     ``_num_partitions`` (internal) is passed through to :func:`keyspace`."""
+    digests = {d.lower() for d in ([digest] if isinstance(digest, str) else digest)}
     ks = keyspace(
         spark, width, lower_ord, upper_ord,
         with_ordinal=with_ordinal, _num_partitions=_num_partitions,
     )
     col = F.col("candidate")
     hashed = F.sha1(col) if hash_func == "sha1" else F.sha2(col, 256)
-    return ks.filter(hashed == F.lit(digest.lower()))
+    return ks.withColumn("digest", hashed).filter(F.col("digest").isin(sorted(digests)))
 
 
 def crack_verdict_df(
@@ -144,27 +156,31 @@ def _collect_partitions(spark: SparkSession, jrdd, parts: list[int]) -> list[Row
 
 def _first_match(
     spark: SparkSession,
-    digest: str,
+    digests: set[str],
     width: int,
     lo: int,
     hi: int,
     hash_func: str,
-) -> str | None:
-    """Lowest-ordinal candidate in ``[lo, hi]`` whose hash is ``digest``,
-    or None: ascending windows of ``defaultParallelism`` partitions of
-    one filtered plan, stopping at the first window with a match (the
-    module docstring gives the A2 argument)."""
+) -> dict[str, str]:
+    """Each of the lowercase ``digests`` that has a preimage in
+    ``[lo, hi]``, mapped to its lowest-ordinal candidate: ascending
+    windows of ``defaultParallelism`` partitions of one filtered plan,
+    stopping once every digest has matched (the module docstring gives
+    the A2 argument)."""
     cores = spark.sparkContext.defaultParallelism
     parts = _scan_partitions(spark, hi - lo + 1)
     jrdd = candidates_matching(
-        spark, digest, width, lo, hi, hash_func,
+        spark, digests, width, lo, hi, hash_func,
         with_ordinal=True, _num_partitions=parts,
     )._jdf.javaToPython()
+    found: dict[str, str] = {}
     for start in range(0, parts, cores):
+        if found.keys() == digests:
+            break
         rows = _collect_partitions(spark, jrdd, list(range(start, start + cores)))
-        if rows:
-            return min(rows, key=lambda r: r["ordinal"])["candidate"]
-    return None
+        for r in sorted(rows, key=lambda r: r["ordinal"]):
+            found.setdefault(r["digest"], r["candidate"])
+    return found
 
 
 def crack(
@@ -180,7 +196,8 @@ def crack(
     of the space *unlaunched*; the answer is the deterministic min.  A
     miss scans every partition once, as the reference's exhaustion path.
     """
-    hit = _first_match(spark, digest, width, 0, codec.keyspace_size(width) - 1, hash_func)
+    d, n = digest.lower(), codec.keyspace_size(width)
+    hit = _first_match(spark, {d}, width, 0, n - 1, hash_func).get(d)
     return CrackResult(hit is not None, hit)
 
 
@@ -213,10 +230,10 @@ def crack_chunked(
         raise ValueError(f"chunk_ordinals must be ≥ 1, got {chunk_ordinals}")
     n = codec.keyspace_size(width)
     hi = n - 1 if upper_ord is None else upper_ord
-    lo = lower_ord
+    lo, d = lower_ord, digest.lower()
     while lo <= hi:
         chunk_hi = min(lo + chunk_ordinals - 1, hi)
-        hit = _first_match(spark, digest, width, lo, chunk_hi, hash_func)
+        hit = _first_match(spark, {d}, width, lo, chunk_hi, hash_func).get(d)
         if hit is not None:
             return CrackResult(True, hit)
         lo = chunk_hi + 1

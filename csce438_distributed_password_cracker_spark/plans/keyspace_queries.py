@@ -269,10 +269,12 @@ def q_codec_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY r.request_id
     """,
     doc="T1 batch kernel: N same-width crack requests answered by ONE "
-    "shared keyspace scan (hash each candidate once, broadcast-join the "
-    "request list) — the reference scans the full space per request per "
-    "worker (server.c:403-434); sharing the scan is the optimization its "
-    "architecture cannot express.  Same kernel foreachBatch runs per "
+    "shared keyspace scan (crack's windowed first-match over the set of "
+    "the batch's digests, stopping once every digest has its min; a miss "
+    "scans the whole space) — the reference scans the full space per "
+    "request per worker (server.c:403-434); sharing the scan is the "
+    "optimization its architecture cannot express.  The verdicts come "
+    "back as a VALUES frame.  Same kernel foreachBatch runs per "
     "micro-batch in streaming/requests.py.",
 )
 def q_crack_batch(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -483,7 +483,8 @@ def _live_verdict_branch(req_id: int, width: int, hash_hex: str) -> str:
     "readStream over a directory of request JSON files → foreachBatch "
     "Q-CORE (one shared keyspace scan per distinct width per batch) → "
     "table sink, trigger(availableNow) so the stream drains and stops "
-    "(streaming/requests.py:99; server.c:477-505 main loop).  The oracle "
+    "(streaming/requests.py answer_request_batch; server.c:477-505 main "
+    "loop).  The oracle "
     "is the one-shot batch answer: incremental ≡ batch is the defining "
     "streaming-agg contract (tests/test_streaming.py asserts it "
     "directly).  Request 2 carries uppercase hex (normalization must not "

@@ -11,20 +11,26 @@ request, appending verdict rows to a sink.  Queueing, at-least-once
 delivery and retries are Spark's (the reference's hand-rolled LSP layer and
 its defects — lost requests on zero workers, server.c:382-385 — vanish).
 
-Per-batch the requests are grouped by (hash, width) so duplicate hashes
-scan the keyspace once, then joined against the generated keyspace — i.e.
-the scan is *shared* across same-width requests: one pass over the width-w
-space answers every width-w request in the batch (the reference scans the
-full space per request, per worker).
+Per batch, the request rows (at most the batch size) are collected once
+and every distinct width gets ONE windowed first-match scan of its space
+(operators/crack.py) over the set of that width's digests: the scan is
+*shared* across same-width requests and stops once each digest has its
+lowest-ordinal preimage (the reference scans the full space per request,
+per worker).  A request that names no valid space — a NULL hash, or a
+NULL width or one outside [1, MAX_WIDTH] — is answered 'x' without a
+scan: no lowercase candidate of such a space exists, the existential A1
+verdict, and the rest of the batch is answered as usual.
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.keyspace import keyspace
+from ..functions import codec
+from ..operators.crack import CrackResult, _first_match
 
 REQUEST_SCHEMA = T.StructType(
     [
@@ -49,55 +55,32 @@ def answer_request_batch(
     spark: SparkSession, requests: DataFrame, hash_func: str = "sha1"
 ) -> DataFrame:
     """Answer a (bounded) batch of crack requests with ONE shared keyspace
-    scan per distinct width.  Returns VERDICT_SCHEMA rows."""
-    widths = [
-        r["width"] for r in requests.select("width").distinct().collect()
-    ]  # tiny driver-side list: one entry per distinct width (≤13)
-    verdicts = None
-    for w in widths:
-        reqs_w = requests.filter(F.col("width") == w)
-        ks = keyspace(spark, w)
-        hashed = ks.select(
-            "candidate",
-            (
-                F.sha1(F.col("candidate"))
-                if hash_func == "sha1"
-                else F.sha2(F.col("candidate"), 256)
-            ).alias("digest"),
-        )
-        # lower() normalizes request-supplied hex: crack() lowercases its
-        # target digest, and an uppercase-hex request must not silently miss
-        hits = (
-            hashed.join(
-                F.broadcast(reqs_w.select("request_id", "hash")),
-                F.col("digest") == F.lower(F.col("hash")),
-            )
-            .groupBy("request_id")
-            .agg(F.min("candidate").alias("password"))
-        )
-        # hits is post-aggregation (≤ batch-size rows, one per request):
-        # without the explicit hint the planner loses the broadcast and
-        # pays a two-exchange SortMergeJoin per micro-batch on a ≤3-row
-        # side (round-10 verdict).
-        batch_verdict = (
-            reqs_w.select("request_id")
-            .join(F.broadcast(hits), "request_id", "left")
-            .select(
-                "request_id",
-                F.col("password").isNotNull().alias("found"),
-                "password",
-                F.when(
-                    F.col("password").isNotNull(),
-                    F.concat(F.lit("f "), F.col("password")),
-                )
-                .otherwise(F.lit("x"))
-                .alias("reply"),
-            )
-        )
-        verdicts = batch_verdict if verdicts is None else verdicts.unionAll(batch_verdict)
-    if verdicts is None:
-        return spark.createDataFrame([], VERDICT_SCHEMA)
-    return verdicts
+    scan per distinct width.  Returns one VERDICT_SCHEMA row per request
+    row, as a JVM-side ``VALUES`` frame: ``createDataFrame`` over Python
+    rows would plan as ``Scan ExistingRDD``, evaluated by Python workers
+    on every core (measured at 16.9 Python CPU-s for 3 rows).  The
+    literals are safe to inline: ids are integers and passwords are
+    lowercase candidates."""
+    rows = requests.select("request_id", "hash", "width").collect()
+    digests: dict[int, set[str]] = defaultdict(set)
+    for r in rows:
+        if r["hash"] is not None and r["width"] in range(1, codec.MAX_WIDTH + 1):
+            digests[r["width"]].add(r["hash"].lower())
+    answers = {
+        w: _first_match(spark, ds, w, 0, codec.keyspace_size(w) - 1, hash_func)
+        for w, ds in digests.items()
+    }
+    verdicts = []
+    for r in rows:
+        password = answers.get(r["width"], {}).get((r["hash"] or "").lower())
+        res = CrackResult(password is not None, password)
+        fields = (r["request_id"], res.found, res.password, res.reply)
+        verdicts.append(", ".join("NULL" if v is None else repr(v) for v in fields))
+    # VALUES needs one row: an empty batch gets an all-NULL row that the
+    # limit drops, and either way the frame plans as a LocalTableScan
+    values = ", ".join(f"({v})" for v in verdicts or ["NULL, NULL, NULL, NULL"])
+    sql = f"SELECT * FROM VALUES {values} AS t(request_id, found, password, reply)"
+    return spark.sql(sql).to(VERDICT_SCHEMA).limit(len(verdicts))
 
 
 def start_request_stream(

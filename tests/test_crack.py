@@ -8,6 +8,9 @@ import pytest
 
 from csce438_distributed_password_cracker_spark.functions import codec
 from csce438_distributed_password_cracker_spark.operators import crack as crack_mod
+from csce438_distributed_password_cracker_spark.streaming.requests import (
+    answer_request_batch,
+)
 
 # Pinned golden rows (FIXTURES.md §1) — sha1 of known plains.
 GOLDEN_SHA1 = {
@@ -340,21 +343,90 @@ def test_window_shape_hit_in_window_k_runs_k_jobs(spark):
 @pytest.mark.parametrize("width", [1, 2, 3, 4, 5])
 def test_crack_equals_verdict_min_at_window_edges(spark, width):
     """crack() answers crack_verdict_df's min (A2) at the first and last
-    ordinal of every window and of the space.  Width 1 has more
-    partitions than ordinals on a wide host, so some partitions are
-    empty."""
+    ordinal of every window and of the space, and so does one scan over
+    all of those digests as a set.  Width 1 has more partitions than
+    ordinals on a wide host, so some partitions are empty."""
     n = codec.keyspace_size(width)
     parts = crack_mod._scan_partitions(spark, n)
     cores = spark.sparkContext.defaultParallelism
     edges = {0, n - 1}
     for first, last in _window_edges(0, n, parts, cores):
         edges |= {first, last}
+    verdicts = {}
     for ordinal in sorted(edges):
         plain = codec.py_decode(ordinal, width)
         digest = hashlib.sha1(plain.encode()).hexdigest()
         verdict = crack_mod.crack_verdict_df(spark, digest, width).first()
         assert verdict["password"] == plain
         assert crack_mod.crack(spark, digest, width).password == verdict["password"]
+        verdicts[digest] = verdict["password"]
+    assert crack_mod._first_match(spark, set(verdicts), width, 0, n - 1, "sha1") == verdicts
+
+
+#: request batches as (request_id, width, at, uppercase) rows.  ``at`` is
+#: the window whose last ordinal is the preimage, "miss" a digest with no
+#: preimage, or None for a NULL hash.  Widths NULL and 14 name no space;
+#: their digest is width 3's, which a width-3 scan would find.
+REQUEST_BATCHES = {
+    "duplicate_digests": [(1, 3, 0, False), (1, 3, 0, False), (2, 3, 0, False)],
+    "uppercase_hex": [(1, 3, 1, True), (2, 3, 1, False)],
+    "hits_and_misses": [(1, 3, 0, False), (2, 3, "miss", False), (3, 4, 1, False)],
+    "hit_in_window_k_and_miss": [(1, 4, 2, False), (2, 3, "miss", False)],
+    "malformed_rows": [
+        (1, 3, 0, False), (2, None, 0, False), (3, 14, 0, False), (4, 3, None, False),
+    ],
+    "empty": [],
+}
+
+
+def _request_frame(spark, rows):
+    """REQUEST_SCHEMA rows as a JVM-side VALUES frame (an empty batch is
+    a one-row frame limited to zero rows)."""
+    values = ", ".join(
+        "(%s)" % ", ".join("NULL" if v is None else repr(v) for v in r) for r in rows
+    ) or "(0, NULL, NULL)"
+    return spark.sql(
+        "SELECT CAST(request_id AS BIGINT) AS request_id, CAST(hash AS STRING) AS hash, "
+        "CAST(width AS INT) AS width, CAST(NULL AS TIMESTAMP) AS submitted_at "
+        f"FROM VALUES {values} AS t(request_id, hash, width)"
+    ).limit(len(rows))
+
+
+@pytest.mark.parametrize("batch", sorted(REQUEST_BATCHES))
+def test_request_batch_runs_one_scan_per_width(spark, batch):
+    """answer_request_batch answers every request row, duplicates too,
+    through one windowed scan per distinct width.  A width's scan runs
+    its windows up to the last one its digests need, or all of them when
+    one misses.  A NULL hash, or a NULL or out-of-range width, gets 'x'
+    without a scan.  The verdict frame is a JVM literal: no ExistingRDD
+    and no Exchange in its plan."""
+    cores = spark.sparkContext.defaultParallelism
+    rows, want, runs = [], [], {}
+    for rid, width, at, upper in REQUEST_BATCHES[batch]:
+        valid = width in range(1, codec.MAX_WIDTH + 1)
+        w = width if valid else 3
+        n = codec.keyspace_size(w)
+        edges = _window_edges(0, n, crack_mod._scan_partitions(spark, n), cores)
+        plain = codec.py_decode(edges[at][1], w) if isinstance(at, int) else None
+        if at is None:
+            digest = None
+        elif at == "miss":
+            digest = MISS_SHA1
+        else:
+            digest = hashlib.sha1(plain.encode()).hexdigest()
+        rows.append((rid, digest.upper() if upper else digest, width))
+        password = plain if valid else None
+        reply = "x" if password is None else f"f {password}"
+        want.append((rid, password is not None, password, reply))
+        if valid and digest is not None:
+            runs[width] = max(runs.get(width, 0), len(edges) if at == "miss" else at + 1)
+    group = f"request_batch_{batch}"
+    out = _run_in_group(spark, group, answer_request_batch, _request_frame(spark, rows))
+    windows = [list(range(s, s + cores)) for k in runs.values() for s in range(0, k * cores, cores)]
+    assert _job_partitions(spark, group) == windows
+    assert sorted(map(tuple, out.collect()), key=repr) == sorted(want, key=repr)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "Exchange" not in plan, plan
 
 
 def test_collect_partitions_reads_only_the_given_partitions(spark):

@@ -313,11 +313,10 @@ SHUFFLE_BUDGET = {
     # physical work, previously eager/invisible), and the fused ghh
     # branch adds its own per-group merge + exact-recount pair.
     "q_collocations": 9,
-    # q_crack_batch 2 -> 1 round 11: the post-aggregation verdict join
-    # carries an explicit broadcast hint now (the ≤batch-size hits side
-    # was falling back to a two-exchange SortMergeJoin); the one
-    # remaining exchange is the hits groupBy's.
-    "q_crack_batch": 1,
+    # q_crack_batch 1 -> 0: the batch runs crack's windowed first-match
+    # scan once per width and returns its verdicts as a VALUES frame —
+    # no join, no groupBy, so no exchange at all.
+    "q_crack_batch": 0,
     "q_crack_throughput": 1, "q_crack_verdicts": 1,
     "q_date_ops": 1,
     "q_dedup_components": 2, "q_dedup_embedding": 1, "q_dedup_exact": 7,

@@ -41,10 +41,11 @@ CHAOS_SCRIPT = textwrap.dedent(
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    import csce438_distributed_password_cracker_spark.operators.crack as C
     import csce438_distributed_password_cracker_spark.streaming.requests as R
 
     retries = spark.sparkContext.accumulator(0)
-    orig_keyspace = R.keyspace
+    orig_keyspace = C.keyspace
 
     def chaos_keyspace(spark, width, *a, **k):
         ks = orig_keyspace(spark, width, *a, **k)
@@ -64,7 +65,7 @@ CHAOS_SCRIPT = textwrap.dedent(
 
         return ks.mapInPandas(flaky, ks.schema)
 
-    R.keyspace = chaos_keyspace  # inject into the foreachBatch kernel
+    C.keyspace = chaos_keyspace  # inject into the foreachBatch kernel
 
     hit = hashlib.sha256(b"qed").hexdigest()
     miss = hashlib.sha256(b"NOPE!").hexdigest()

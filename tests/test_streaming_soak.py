@@ -71,10 +71,11 @@ SOAK_SCRIPT = textwrap.dedent(
             tracker_acc["evictions"], d["n_unseen_evictions"]
         )
 
+    import csce438_distributed_password_cracker_spark.operators.crack as C
     import csce438_distributed_password_cracker_spark.streaming.requests as R
 
     retries = spark.sparkContext.accumulator(0)
-    orig_keyspace = R.keyspace
+    orig_keyspace = C.keyspace
 
     def chaos_keyspace(spark, width, *a, **k):
         ks = orig_keyspace(spark, width, *a, **k)
@@ -90,7 +91,7 @@ SOAK_SCRIPT = textwrap.dedent(
 
         return ks.mapInPandas(flaky, ks.schema)
 
-    R.keyspace = chaos_keyspace  # every micro-batch pays one task retry
+    C.keyspace = chaos_keyspace  # every micro-batch pays one task retry
 
     def req(rid, word=None):
         h = (hashlib.sha256(word.encode()).hexdigest() if word
@@ -262,11 +263,12 @@ FAULT_SOAK_SCRIPT = textwrap.dedent(
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    import csce438_distributed_password_cracker_spark.operators.crack as C
     import csce438_distributed_password_cracker_spark.streaming.requests as R
     from csce438_distributed_password_cracker_spark.streaming.faults import inject_faults
 
     retries = spark.sparkContext.accumulator(0)
-    orig_keyspace = R.keyspace
+    orig_keyspace = C.keyspace
 
     def chaos_keyspace(spark, width, *a, **k):
         ks = orig_keyspace(spark, width, *a, **k)
@@ -282,7 +284,7 @@ FAULT_SOAK_SCRIPT = textwrap.dedent(
 
         return ks.mapInPandas(flaky, ks.schema)
 
-    R.keyspace = chaos_keyspace
+    C.keyspace = chaos_keyspace
 
     FAULTS = dict(
         key_cols=["request_id"], drop_frac=0.25, dup_frac=0.25,

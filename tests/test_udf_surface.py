@@ -1,18 +1,54 @@
 """The §2.11 UDAF/UDTF surface: the grouped-agg pandas weighted median
 vs a closed-form SQL twin, and the segment-splitter UDTF vs the native
-split+posexplode plan (native is production; these validate the
-custom-extension path)."""
+split+posexplode plan (native is production; these fixtures validate the
+custom-extension path, and no engine code uses them)."""
 
-from __future__ import annotations
-
+import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf, udtf
 
-from csce438_distributed_password_cracker_spark.functions.pandas_udfs import (
-    make_weighted_median_udaf,
-)
-from csce438_distributed_password_cracker_spark.functions.udtfs import (
-    SegmentSplitter,
-)
+# no ``from __future__ import annotations`` in this file: pandas_udf and
+# udtf resolve real type hints, not stringified ones
+
+
+def make_weighted_median_udaf():
+    """Grouped-aggregate pandas UDAF (§2.11 UDAF surface): the exact
+    LOWER weighted median — smallest value whose cumulative weight
+    reaches half the total.  Spark has no native weighted percentile;
+    this is the Arrow-batched aggregation path for genuinely custom
+    aggregates (one pandas call per group, vectorized inside).  NULL
+    values/weights are ignored; an all-NULL group yields NULL."""
+
+    @pandas_udf("double")
+    def weighted_median(v: pd.Series, w: pd.Series) -> float:
+        keep = v.notna() & w.notna() & (w > 0)
+        v, w = v[keep], w[keep]
+        if v.empty:
+            return None
+        order = v.sort_values().index
+        v, w = v.loc[order], w.loc[order]
+        cum = w.cumsum()
+        half = float(w.sum()) / 2.0
+        return float(v[cum >= half].iloc[0])
+
+    return weighted_median
+
+
+@udtf(returnType="idx: int, segment: string, n_chars: int")
+class SegmentSplitter:
+    """Python UDTF (§2.11 UDTF surface): split a text into non-empty
+    segments on a literal separator, one output row per segment with its
+    ordinal and length — the sentence-splitting shape as a table
+    function, checked against the native split + posexplode plan."""
+
+    def eval(self, text: str, sep: str):
+        if text is None:
+            return
+        idx = 0
+        for seg in text.split(sep):
+            if seg:
+                yield idx, seg, len(seg)
+                idx += 1
 
 
 def test_weighted_median_udaf_closed_form(spark):
